@@ -20,7 +20,7 @@ from typebus_spark.codec.envelope import decode_envelope, encode_envelope
 from typebus_spark.registry import Service
 from typebus_spark.runtime import (
     DEAD_LETTER_TOPIC,
-    TRACE_TOPIC,
+    TRACE_IN_TOPIC,
     FileBus,
     run_batch,
     start_service,
@@ -173,6 +173,32 @@ def test_route_and_reply_correlation(spark, svc):
     assert keys == {"c1", "c2"}
 
 
+def test_column_partition_key_sets_reply_key(spark):
+    """withPartitionKey(U => String) as an EXPRESSION over the handler
+    output (bus/package.scala:36-39): the reply's bus key is the
+    expression's value, on the first build and on the warm rebuild that
+    reuses the stream's pinned reply trees."""
+    s = Service("keyed-service")
+    s.declare_type("api.OrderPlaced", ORDER_SCHEMA)
+    s.declare_type("api.OrderConfirmed", CONFIRM_SCHEMA)
+    s.register_stream(
+        "api.OrderPlaced",
+        "api.OrderConfirmed",
+        lambda df: df.select(
+            "meta", "order_id", "customer_id", F.lit("ok").alias("status")
+        ),
+        partition_key=F.concat(
+            F.col("customer_id"), F.lit("/"), F.col("order_id")
+        ),
+    )
+    for _ in range(2):
+        out = run_batch(s, _orders(spark)).topic("api.OrderConfirmed")
+        rows = out.collect()
+        assert {bytes(r["key"]).decode() for r in rows} == {"c1/o1", "c2/o2"}
+        metas = [json.loads(bytes(r["value"]).decode())["meta"] for r in rows]
+        assert {m["key"] for m in metas} == {"c1/o1", "c2/o2"}
+
+
 def test_unhandled_topic_dead_letters(spark, svc):
     df = spark.createDataFrame([("x",)], "order_id string")
     raw = encode_envelope(df, "api.Unknown")
@@ -203,7 +229,7 @@ def test_rpc_reply_also_published_to_caller_topic(spark, svc):
 
 
 def test_trace_side_output_loop_guard(spark, svc):
-    from typebus_spark.runtime import TRACE_IN_TOPIC, TRACE_OUT_TOPIC
+    from typebus_spark.runtime import TRACE_OUT_TOPIC
 
     res = run_batch(svc, _orders(spark), trace=True)
     tr = res.topic(TRACE_IN_TOPIC)
@@ -220,12 +246,15 @@ def test_trace_side_output_loop_guard(spark, svc):
     ov = json.loads(bytes(out_tr.collect()[0]["value"]).decode())
     assert ov["payload"]["event"]["meta"]["event_type"] == "api.OrderConfirmed"
     # a trace event re-entering the bus must NOT be re-traced
-    svc.declare_type(TRACE_TOPIC, ORDER_SCHEMA)
-    svc.register_stream(TRACE_TOPIC, None, lambda df: None)
+    svc.declare_type(TRACE_IN_TOPIC, ORDER_SCHEMA)
+    svc.register_stream(TRACE_IN_TOPIC, None, lambda df: None)
     df = spark.createDataFrame([("t1", "c", 0.0)], ORDER_SCHEMA)
-    raw = encode_envelope(df, TRACE_TOPIC)
+    raw = encode_envelope(df, TRACE_IN_TOPIC)
     res2 = run_batch(svc, raw, trace=True)
-    assert res2.topic(TRACE_TOPIC) is None or res2.topic(TRACE_TOPIC).count() == 0
+    assert (
+        res2.topic(TRACE_IN_TOPIC) is None
+        or res2.topic(TRACE_IN_TOPIC).count() == 0
+    )
 
 
 def test_per_event_trace_flag_and_exception_trace(spark):

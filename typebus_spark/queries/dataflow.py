@@ -224,11 +224,10 @@ def q_route_counts(spark, sf_dir):
             payload_cols=["event_id", "user_id", "value"],
         ),
     )
-    # materialize stays True: with ONE data-plane schema group
-    # run_batch skips the raw checkpoint anyway (the staged frame IS
-    # one) and checkpoints only the DECODE — which ~16 branches
-    # consume; materialize=False would re-parse the envelope JSON
-    # per branch (the router's most expensive expression)
+    # with ONE data-plane schema group run_batch skips the raw
+    # checkpoint (the staged frame IS one) and checkpoints only the
+    # DECODE — unconditionally, since ~16 branches consume it and would
+    # each re-parse the envelope JSON otherwise
     res = run_batch(svc, raw)
     # single-pass tail: every output row carries its destination topic, so
     # one union + one groupBy aggregates all routes in ONE job (empty
@@ -575,11 +574,10 @@ def q_entity_lookup(spark, sf_dir):
             "api.UserState.get",
         ),
     )
-    # materialize stays True: with ONE data-plane schema group
-    # run_batch skips the raw checkpoint anyway (the staged frame IS
-    # one) and checkpoints only the DECODE — which ~16 branches
-    # consume; materialize=False would re-parse the envelope JSON
-    # per branch (the router's most expensive expression)
+    # with ONE data-plane schema group run_batch skips the raw
+    # checkpoint (the staged frame IS one) and checkpoints only the
+    # DECODE — unconditionally, since ~16 branches consume it and would
+    # each re-parse the envelope JSON otherwise
     res = run_batch(svc, raw)
     replies = res.topic("api.UserState")
     return decode_envelope(replies, state_schema).select("payload.*")

@@ -509,10 +509,13 @@ def q_dedup_keep_best(spark, sf_dir):
     # the aggregate could run; max(struct(n_chars, -doc_id)) computes
     # the same deterministic winner (longest, lowest-id tie-break —
     # struct comparison is field-by-field, and -doc_id is unique so
-    # ordering is total) as a plain aggregate WITH map-side partials
-    # and no sort — at scale a giant cluster collapses per map task
-    # instead of landing on one window partition (windows get no AQE
-    # skew handling, same argument as bigram c2).
+    # ordering is total) as an aggregate WITH map-side partials, so a
+    # giant cluster collapses per map task instead of landing on one
+    # window partition (windows get no AQE skew handling, same argument
+    # as bigram c2). It is NOT sort-free: a struct-typed max buffer is
+    # not hash-aggregatable, so the plan is SortAggregate with a Sort
+    # under both the partial and the final aggregate
+    # (plans/r14/q_dedup_keep_best_after.txt).
     return (
         sized.groupBy("cluster_id")
         .agg(

@@ -49,7 +49,6 @@ TRACE_IN_TOPIC = "typebus.InEventTrace"
 TRACE_OUT_TOPIC = "typebus.OutEventTrace"
 TRACE_EXCEPTION_TOPIC = "typebus.ExceptionTrace"
 TRACE_TOPICS = (TRACE_IN_TOPIC, TRACE_OUT_TOPIC, TRACE_EXCEPTION_TOPIC)
-TRACE_TOPIC = TRACE_IN_TOPIC  # back-compat alias (pre-r2 single topic)
 SOCKET_TOPIC_PREFIX = "typebus.socket."
 
 # ServiceException shape (event/package.scala:28-33)
@@ -163,7 +162,8 @@ class BatchResult:
 # them costs a py4j round-trip per node (a fresh EventMeta struct is ~60
 # such trips), and run_batch used to rebuild identical trees every call
 # (~1.4 s of socket chatter per micro-batch, measured). The lru_caches
-# below pin the STATIC trees; reuse across plans is safe, and
+# below pin the STATIC trees, keyed on hashable specs (type FQNs, service
+# name, column-name tuples); reuse across plans is safe, and
 # nondeterministic leaves (uuid) still evaluate per row at execution.
 from functools import lru_cache  # noqa: E402
 
@@ -234,36 +234,59 @@ def _reply_env(out_type: str, out_cols: tuple, key_col: F.Column) -> F.Column:
     )
 
 
-@lru_cache(maxsize=256)
-def _reply_env_cached(
-    out_type: str, out_cols: tuple, pk: str | None
+def _reply_projections(
+    out_type: str, out_cols: tuple, key_col: F.Column
 ) -> tuple:
+    """(reply envelope struct, multicast reply projection: key, value,
+    fanned-destinations)."""
+    env = _reply_env(out_type, out_cols, key_col)
+    return env, (
+        key_col.cast("binary").alias("key"),
+        F.to_json(env).cast("binary").alias("value"),
+        _fan_cols(out_type),
+    )
+
+
+@lru_cache(maxsize=256)
+def _reply_cols(out_type: str, out_cols: tuple, pk: str | None) -> tuple:
+    """``_reply_projections`` for a partition key given by column name
+    (or none): shared across services and Service instances — a fresh
+    Service per query invocation otherwise rebuilds ~70 py4j calls per
+    stream, and every service carries the same descriptor reply."""
     key_col = (
         F.col(pk).cast("string") if pk else F.lit(None).cast("string")
     )
-    return key_col, _reply_env(out_type, out_cols, key_col)
+    return _reply_projections(out_type, out_cols, key_col)
 
 
-_fanned_cols_cache: dict = {}
+@lru_cache(maxsize=256)
+def _out_trace_cols(
+    service_name: str, out_type: str, out_cols: tuple, pk: str | None
+) -> tuple:
+    env, _ = _reply_cols(out_type, out_cols, pk)
+    return _trace_wrap(service_name, env, TRACE_OUT_TOPIC)
 
 
-def _fanned_cols(key_col: F.Column, env: F.Column, fan_cols: F.Column):
-    """(key, value, fanned-destinations) projection — pure function of
-    three cached Column singletons, keyed by identity (Columns are
-    unhashable); pins its inputs so their ids stay live."""
-    key = (id(key_col), id(env), id(fan_cols))
-    hit = _fanned_cols_cache.get(key)
-    if hit is not None:
-        return hit[0]
-    while len(_fanned_cols_cache) >= 512:
-        _fanned_cols_cache.pop(next(iter(_fanned_cols_cache)))
-    cols = (
-        key_col.cast("binary").alias("key"),
-        F.to_json(env).cast("binary").alias("value"),
-        fan_cols,
-    )
-    _fanned_cols_cache[key] = (cols, key_col, env, fan_cols)
-    return cols
+def _stream_reply_cols(service_name: str, sd, out_cols: tuple) -> tuple:
+    """(OutEventTrace projection, multicast reply projection) of one
+    stream. A Column partition key is unhashable, so its trees are
+    pinned on the StreamDef instead of cached by spec."""
+    pk = sd.partition_key
+    if pk is None or isinstance(pk, str):
+        return (
+            _out_trace_cols(service_name, sd.out_type, out_cols, pk),
+            _reply_cols(sd.out_type, out_cols, pk)[1],
+        )
+    spec = (service_name, out_cols)
+    pinned = getattr(sd, "_reply_plan", None)
+    if pinned is None or pinned[0] != spec:
+        env, fanned = _reply_projections(
+            sd.out_type, out_cols, pk.cast("string")
+        )
+        trace = _trace_wrap(service_name, env, TRACE_OUT_TOPIC)
+        pinned = (spec, (trace, fanned))
+        sd._reply_plan = pinned
+    return pinned[1]
 
 
 @lru_cache(maxsize=1)
@@ -371,91 +394,55 @@ def _flat_env(payload_fields: tuple) -> F.Column:
     )
 
 
-_trace_cols_cache: dict = {}
-
-
-def _trace_cols(service_name: str, env: F.Column, trace_fqn: str) -> tuple:
-    # keyed on the env Column by identity (Column is unhashable) —
-    # callers pass lru-cached singletons (_meta_payload_env/_flat_env),
-    # so hits are real and ids stable; env is pinned in the value to
-    # keep its id from being reused. The wrapper tree is pure and this
-    # build was a measured per-branch driver hotspot.
-    key = (service_name, id(env), trace_fqn)
-    hit = _trace_cols_cache.get(key)
-    if hit is not None:
-        return hit[0]
-    # Bounded: long-running services can churn env structs (rebuilt
-    # _reply_plan structs, evicted _flat_env entries) — evict oldest
-    # entries past a generous cap instead of pinning Columns forever.
-    while len(_trace_cols_cache) >= 512:
-        _trace_cols_cache.pop(next(iter(_trace_cols_cache)))
+def _trace_wrap(service_name: str, env: F.Column, trace_fqn: str) -> tuple:
+    """Wrap envelopes as a typed Trace event — payload = (service,
+    event), meta = fresh, eventType = the trace FQN, trace=false
+    (bus/package.scala:75-89)."""
     payload = F.struct(
         F.lit(service_name).alias("service"), env.alias("event")
     )
     out_env = F.struct(
         _static_meta(trace_fqn).alias("meta"), payload.alias("payload")
     )
-    cols = (
+    return (
         F.lit(None).cast("binary").alias("key"),
         F.to_json(out_env).cast("binary").alias("value"),
         F.lit(trace_fqn).alias("topic"),
     )
-    _trace_cols_cache[key] = (cols, env)
-    return cols
-
-
-def _trace_rows(
-    service_name: str, traced: DataFrame, env: F.Column, trace_fqn: str
-) -> DataFrame:
-    """Wrap envelopes as a typed Trace event — payload = (service,
-    event), meta = fresh, eventType = the trace FQN, trace=false
-    (bus/package.scala:75-89)."""
-    return traced.select(*_trace_cols(service_name, env, trace_fqn))
-
-
-@lru_cache(maxsize=32)
-def _dead_letter_cols(message: str) -> tuple:
-    payload = F.struct(
-        F.lit(message).alias("message"),
-        F.lit("java.lang.RuntimeException").alias("throwable_type"),
-        F.array().cast("array<string>").alias("stack_trace"),
-        F.map_from_arrays(
-            F.array(F.lit("topic")), F.array(F.col("topic"))
-        ).alias("extra"),
-    )
-    env = F.struct(
-        _static_meta("typebus.ServiceException").alias("meta"),
-        payload.alias("payload"),
-    )
-    return (
-        F.lit(None).cast("binary").alias("key"),
-        F.to_json(env).cast("binary").alias("value"),
-        F.lit(DEAD_LETTER_TOPIC).alias("topic"),
-    )
-
-
-def _dead_letter(raw: DataFrame, message: str) -> DataFrame:
-    """Wrap raw bus rows as ServiceException envelopes
-    (produceErrorReport, bus/package.scala:93-125)."""
-    return raw.select(*_dead_letter_cols(message))
 
 
 @lru_cache(maxsize=256)
-def _dead_letter_cols_static(message: str, orig_topic: str) -> tuple:
-    """``_dead_letter_cols`` with the originating topic as a LITERAL —
-    fuses the former two-select chain (project topic lit → wrap) into
-    one projection for the per-stream branches whose topic is known at
-    build time (undecodable payload, handler give-up). The intermediate
-    select also computed a to_json envelope the wrapper immediately
-    discarded — pure py4j + plan-node overhead per warm router build
-    (r12 verdict item 1, tools/py4j_sites.py)."""
+def _trace_cols(
+    service_name: str, trace_fqn: str, payload_fields: tuple | None = None
+) -> tuple:
+    """Trace projection over decoded ``(meta, payload)`` rows, or — with
+    ``payload_fields`` — over FLAT rows (meta + payload fields) whose
+    envelope struct is rebuilt. The wrapper tree is pure and its build
+    was a measured per-branch driver hotspot."""
+    env = (
+        _meta_payload_env()
+        if payload_fields is None
+        else _flat_env(payload_fields)
+    )
+    return _trace_wrap(service_name, env, trace_fqn)
+
+
+@lru_cache(maxsize=256)
+def _dead_letter_cols(message: str, orig_topic: str | None) -> tuple:
+    """Wrap bus rows as ServiceException envelopes (produceErrorReport,
+    bus/package.scala:93-125). ``orig_topic`` None reads the row's own
+    ``topic`` column (unroutable rows); a literal names the stream whose
+    branch is known at build time (undecodable payload, handler give-up),
+    so those branches need one projection, not a topic-lit select and a
+    wrap (r12 verdict item 1, tools/py4j_sites.py)."""
+    origin = F.col("topic") if orig_topic is None else F.lit(orig_topic)
     payload = F.struct(
         F.lit(message).alias("message"),
         F.lit("java.lang.RuntimeException").alias("throwable_type"),
         F.array().cast("array<string>").alias("stack_trace"),
-        F.map_from_arrays(
-            F.array(F.lit("topic")), F.array(F.lit(orig_topic))
-        ).alias("extra"),
+        F.map_from_arrays(F.array(F.lit("topic")), F.array(origin)).alias(
+            "extra"
+        ),
     )
     env = F.struct(
         _static_meta("typebus.ServiceException").alias("meta"),
@@ -473,9 +460,6 @@ def run_batch(
     raw: DataFrame | None,
     trace: bool = False,
     now_epoch: int | None = None,
-    lazy: bool = True,
-    materialize: bool = True,
-    live_topics: set[str] | None = None,
     decoded_inputs: dict[str, DataFrame] | None = None,
     emit_decoded_retry: bool = False,
 ) -> BatchResult:
@@ -485,21 +469,14 @@ def run_batch(
     transport-neutral bus row (Kafka source shape). ``now_epoch`` pins the
     retry clock for deterministic tests (wall clock otherwise).
 
-    Lazy by default: every branch is declared unconditionally and nothing
-    runs until the caller materializes (``BatchResult.union_all`` gives
-    the whole batch as one single-pass frame). ``lazy=False`` restores
-    the trimmed-output mode — one ``isEmpty`` driver action PER BRANCH,
-    each re-executing the decode+handler lineage; only worth it for
-    interactive inspection of which topics fired.
-
-    ``materialize`` (default) localCheckpoints ``raw`` up front: the
-    router fans every batch into ~8 branches per stream, and without the
-    checkpoint each branch re-executes the caller's upstream lineage
-    (source scan + envelope encode). One bounded materialization of the
-    (key, value, topic) rows beats N re-scans — pass ``materialize=False``
-    only when the caller already checkpointed (drain_batches rounds).
-    The per-stream DECODE is always checkpointed (see inline note) — the
-    routing fan-out re-parses the envelope JSON per branch otherwise.
+    Lazy: every branch is declared unconditionally and nothing runs until
+    the caller materializes (``BatchResult.union_all`` gives the whole
+    batch as one single-pass frame). The decode is always checkpointed
+    (lazily) — the routing fan-out re-parses the envelope JSON per branch
+    otherwise. With one data-plane schema group that checkpoint is the
+    only one; with several, ``raw`` is checkpointed too, so the ~8
+    branches per stream do not each re-run the caller's upstream lineage
+    (source scan + envelope encode).
 
     ``decoded_inputs`` maps in-type FQN → an ALREADY-DECODED ``(meta,
     payload, topic)`` frame, unioned past the decode stage (the drain
@@ -535,12 +512,10 @@ def run_batch(
     data_keys = [
         k for k, fqns in schema_groups.items() if not _all_service_level(fqns)
     ]
-    single_group = (
-        raw is not None and live_topics is None and len(data_keys) == 1
-    )
+    single_group = raw is not None and len(data_keys) == 1
     dominant_key = data_keys[0] if single_group else None
     if raw is not None:
-        if materialize and not single_group:
+        if not single_group:
             # LAZY checkpoint: the first downstream action materializes
             # it (RDD cache locks compute each partition exactly once,
             # so the nondeterministic uuid envelopes stay consistent
@@ -554,9 +529,7 @@ def run_batch(
         # jobs — with ≤2 schema groups the probe job costs as much as it
         # could ever save, so assume everything is live (empty groups
         # then decode an empty filter: same price as the probe).
-        if live_topics is not None:
-            live = live_topics
-        elif not single_group and len(schema_groups) > 2:
+        if not single_group and len(schema_groups) > 2:
             live = {r[0] for r in raw.select("topic").distinct().collect()}
         else:
             live = None  # unknown → treat every registered topic as live
@@ -607,12 +580,12 @@ def run_batch(
                 # per-stream frames always topic-filter; unroutable rows
                 # dead-letter and control-plane slices re-decode from the
                 # same checkpoint below.
-                gdec = decode_envelope(raw, payload_schema, keep_value=True)
-                if materialize:
-                    # lazy for the same reason as the raw checkpoint:
-                    # the caller's one materialization computes the
-                    # decode once; no separate build-time job
-                    gdec = gdec.localCheckpoint(eager=False)
+                # lazy for the same reason as the raw checkpoint: the
+                # caller's one materialization computes the decode once;
+                # no separate build-time job
+                gdec = decode_envelope(
+                    raw, payload_schema, keep_value=True
+                ).localCheckpoint(eager=False)
                 deadletter_src = gdec
                 for f in group_live:
                     decoded_by_fqn[f] = gdec.filter(
@@ -658,7 +631,7 @@ def run_batch(
         )
         res._add(
             DEAD_LETTER_TOPIC,
-            _dead_letter(unhandled, "no handler for topic"),
+            unhandled.select(*_dead_letter_cols("no handler for topic", None)),
         )
 
     for in_fqn, sd in service.streams.items():
@@ -682,7 +655,7 @@ def run_batch(
                     in_fqn,
                     pending.select(*_retry_pending_cols(retry_topic(in_fqn))),
                 )
-            elif lazy or not pending.isEmpty():
+            else:
                 res._add(
                     retry_topic(in_fqn),
                     pending.select(
@@ -692,14 +665,12 @@ def run_batch(
             decoded = eligible_now(decoded, now_epoch)
 
         bad_cond, good_cond = _payload_null_split()
-        bad = decoded.filter(bad_cond)
-        if lazy or not bad.isEmpty():
-            res._add(
-                DEAD_LETTER_TOPIC,
-                bad.select(
-                    *_dead_letter_cols_static("undecodable payload", in_fqn)
-                ),
-            )
+        res._add(
+            DEAD_LETTER_TOPIC,
+            decoded.filter(bad_cond).select(
+                *_dead_letter_cols("undecodable payload", in_fqn)
+            ),
+        )
         good = decoded.filter(good_cond)
 
         # O1 InEventTrace (KafkaBus.scala:200): consume-side trace of every
@@ -707,11 +678,8 @@ def run_batch(
         # never-trace-a-trace loop guard (bus/package.scala:69-74)
         res._add(
             TRACE_IN_TOPIC,
-            _trace_rows(
-                service.name,
-                good.filter(_trace_gate(trace)),
-                _meta_payload_env(),
-                TRACE_IN_TOPIC,
+            good.filter(_trace_gate(trace)).select(
+                *_trace_cols(service.name, TRACE_IN_TOPIC)
             ),
         )
 
@@ -728,7 +696,7 @@ def run_batch(
         failed = None
         if out is not None:
             out, failed = split_failures(out)
-        if failed is not None and (lazy or not failed.isEmpty()):
+        if failed is not None:
             from typebus_spark.streaming.retry import ERROR_COL
 
             # ST2 selective retry: only errors matching the stream's
@@ -781,32 +749,27 @@ def run_batch(
                 retry_rows, gave_up = encode_retry(
                     _orig(retryable_ids), in_fqn, sd.retry, payload_fields, now
                 )
-                if lazy or not retry_rows.isEmpty():
-                    res._add(retry_topic(in_fqn), retry_rows)
+                res._add(retry_topic(in_fqn), retry_rows)
             else:
                 gave_up = _orig(retryable_ids)
             if unmatched_ids is not None:
                 gave_up = gave_up.unionByName(_orig(unmatched_ids))
-            if lazy or not gave_up.isEmpty():
-                res._add(
-                    DEAD_LETTER_TOPIC,
-                    gave_up.select(
-                        *_dead_letter_cols_static("handler failed", in_fqn)
-                    ),
-                )
-                # ExceptionTrace alongside the error report
-                # (produceErrorReport, bus/package.scala:110-124);
-                # gave_up rows are flat (meta + payload fields) — rebuild
-                # the envelope struct for the trace wrapper
-                res._add(
-                    TRACE_EXCEPTION_TOPIC,
-                    _trace_rows(
-                        service.name,
-                        gave_up.filter(_trace_gate(trace)),
-                        _flat_env(tuple(payload_fields)),
-                        TRACE_EXCEPTION_TOPIC,
-                    ),
-                )
+            res._add(
+                DEAD_LETTER_TOPIC,
+                gave_up.select(*_dead_letter_cols("handler failed", in_fqn)),
+            )
+            # ExceptionTrace alongside the error report
+            # (produceErrorReport, bus/package.scala:110-124); gave_up
+            # rows are flat (meta + payload fields) — the trace wrapper
+            # rebuilds the envelope struct
+            res._add(
+                TRACE_EXCEPTION_TOPIC,
+                gave_up.filter(_trace_gate(trace)).select(
+                    *_trace_cols(
+                        service.name, TRACE_EXCEPTION_TOPIC, payload_fields
+                    )
+                ),
+            )
 
         if sd.out_type is None or out is None:
             continue  # T2 terminal sink stream
@@ -830,44 +793,16 @@ def run_batch(
                 f"handler for {in_fqn} output is missing declared "
                 f"{sd.out_type} fields: {missing}"
             )
-        # the reply expression trees are pure functions of the StreamDef
-        # (out type, partition key, declared columns) — build once and
-        # pin on the StreamDef; per-micro-batch rebuilds are pure py4j
-        # overhead
-        cached = getattr(sd, "_reply_plan", None)
-        if cached is not None and cached[0] == tuple(out_cols):
-            _, key_col, env = cached
-        else:
-            pk = sd.partition_key
-            if isinstance(pk, (str, type(None))):
-                # pure function of (out type, cols, key name): shared
-                # across Service instances — a fresh Service per query
-                # invocation otherwise rebuilds ~70 py4j calls per stream
-                key_col, env = _reply_env_cached(
-                    sd.out_type, tuple(out_cols), pk
-                )
-            else:
-                key_col = pk.cast("string")
-                env = _reply_env(sd.out_type, tuple(out_cols), key_col)
-            sd._reply_plan = (tuple(out_cols), key_col, env)
-        fan_cols = getattr(sd, "_fan_cols", None)
-        if fan_cols is None:
-            fan_cols = _fan_cols(sd.out_type)
-            sd._fan_cols = fan_cols
+        trace_out_cols, fanned_cols = _stream_reply_cols(
+            service.name, sd, tuple(out_cols)
+        )
         # OutEventTrace (KafkaBus.scala:75): publish-side trace of the
         # reply envelope, gated by the request's meta.trace / global flag
         res._add(
             TRACE_OUT_TOPIC,
-            _trace_rows(
-                service.name,
-                out.filter(_trace_gate(trace)),
-                env,
-                TRACE_OUT_TOPIC,
-            ),
+            out.filter(_trace_gate(trace)).select(*trace_out_cols),
         )
-        fanned = out.select(*_fanned_cols(key_col, env, fan_cols)).select(
-            *_FANNED_TAIL()
-        )
+        fanned = out.select(*fanned_cols).select(*_FANNED_TAIL())
         res._add_shared(
             fanned,
             {
@@ -946,8 +881,7 @@ def drain_batches(
     # localCheckpoint cuts the lineage that would otherwise re-execute
     # every previous round's decode+handler pipeline, multiplicatively
     # with drain depth. Round 1 lets ``run_batch`` place the checkpoint
-    # itself (``materialize=True``): on the single-data-schema fast path
-    # that lands PAST the decode, so terminal outputs (done/dead-letter/
+    # itself: on the single-data-schema fast path it lands PAST the decode, so terminal outputs (done/dead-letter/
     # trace topics) and the round-1 retry snapshot all scan decoded rows
     # — the decode runs exactly once per drain, not once per branch.
     if buffer_size is not None and buffer_order is None:
@@ -971,7 +905,6 @@ def drain_batches(
             service,
             raw,
             now_epoch=now,
-            lazy=True,
             decoded_inputs=feedback,
             emit_decoded_retry=True,
         )
@@ -1069,33 +1002,26 @@ class FileBus:
     def _dir(self, topic: str) -> str:
         return os.path.join(self.root, topic)
 
-    def publish(
-        self,
-        df: DataFrame,
-        topic: str | None = None,
-        topics: list[str] | None = None,
-    ) -> None:
+    def publish(self, df: DataFrame, topic: str | None = None) -> None:
         """Append bus rows to their topic directories.
 
         With ``topic`` the frame goes to that one directory (no driver
-        action on the lineage). With per-row routing, pass ``topics``
-        when the destination set is known, or the frame is materialized
-        ONCE (localCheckpoint) so the distinct-topic probe and the
-        per-topic writes scan materialized rows instead of re-running
-        the upstream pipeline per destination.
+        action on the lineage). With per-row routing the frame is
+        materialized ONCE (localCheckpoint) so the distinct-topic probe
+        and the per-topic writes scan materialized rows instead of
+        re-running the upstream pipeline per destination.
         """
         if topic is not None:
             df.select("key", "value", "topic").write.mode("append").parquet(
                 self._dir(topic)
             )
             return
-        if topics is None:
-            # coalesce first: the routed batch is a union of many narrow
-            # branches — one wave of tasks materializes it, and the
-            # per-topic writes then emit a bounded file count
-            par = df.sparkSession.sparkContext.defaultParallelism
-            df = df.coalesce(par).localCheckpoint(eager=True)
-            topics = [r[0] for r in df.select("topic").distinct().collect()]
+        # coalesce first: the routed batch is a union of many narrow
+        # branches — one wave of tasks materializes it, and the
+        # per-topic writes then emit a bounded file count
+        par = df.sparkSession.sparkContext.defaultParallelism
+        df = df.coalesce(par).localCheckpoint(eager=True)
+        topics = [r[0] for r in df.select("topic").distinct().collect()]
         for top in topics:
             df.filter(F.col("topic") == top).select(
                 "key", "value", "topic"
@@ -1166,13 +1092,8 @@ class KafkaBus:
             reader = reader.option(k, v)
         return reader.load().select(*self.RAW_COLUMNS)
 
-    def publish(
-        self,
-        df: DataFrame,
-        topic: str | None = None,
-        topics: list[str] | None = None,  # noqa: ARG002 — FileBus parity;
+    def publish(self, df: DataFrame, topic: str | None = None) -> None:
         # the Kafka sink routes by the per-row topic column natively
-    ) -> None:
         writer = df.select(*self.RAW_COLUMNS).write.format("kafka")
         for k, v in self.writer_options(topic=topic).items():
             writer = writer.option(k, v)

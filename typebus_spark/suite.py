@@ -137,12 +137,8 @@ DIRTY_SINCE: dict[str, int] = {
     # cached projection tuples (dead-letter fuse, _flat_cols,
     # _decode_sel — r12 verdict item 1); staged_wire now materializes
     # eagerly with a timed count. Every query routing through the
-    # batch router changed plans.
-    "q_route_counts": 13,
-    "q_route_traced": 13,
-    "q_retry_drain": 13,
-    "q_retry_drain_shed": 13,
-    "q_entity_lookup": 13,
+    # batch router changed plans (the run_batch queries' entries are
+    # superseded by r15 below).
     "q_rpc_correlate": 13,
     # r13: corpus-stats stragglers restructured (r12 verdict item 2):
     # bigram_logprob persists ugc (double-scan), perplexity_buckets
@@ -153,9 +149,8 @@ DIRTY_SINCE: dict[str, int] = {
     # token-array frame feeds both the bigram and unigram streams;
     # the ex persist dropped), dsir_logweights gained the spread
     # before its explode+md5 scan — perplexity_buckets and
-    # q_pipeline_curated_mix consume bigram_logprob transitively.
-    "q_bigram_logprob": 13,
-    "q_perplexity_buckets": 13,
+    # q_pipeline_curated_mix consume bigram_logprob transitively
+    # (superseded by r14 below).
     "q_dsir_weights": 13,
     "q_source_overlap": 13,
     # r13 optimization round: profile decomposition keeps its three
@@ -172,7 +167,6 @@ DIRTY_SINCE: dict[str, int] = {
     # Expand), q_heavy_hitter_tokens gets the lambda-free tokens_lower
     # the r13 sweep missed.
     "q16_supplier_part_counts": 13,
-    "q4_priority_exists": 13,
     "q21_sole_late_supplier": 13,
     "q_heavy_hitter_tokens": 13,
     # r13: q7 probes ONE nation dim via aliases instead of two renamed
@@ -187,7 +181,6 @@ DIRTY_SINCE: dict[str, int] = {
     "q_vocab_topk": 13,
     "q_token_entropy": 13,
     "q_text_langid": 13,
-    "q_tfidf_top_terms": 13,
     "q_bpe_pair_counts": 13,
     # r13 optimization round: the exact index stores a third table
     # (per-doc shingle sizes) so incremental_dedup's jaccard joins the
@@ -204,13 +197,42 @@ DIRTY_SINCE: dict[str, int] = {
     # drop_boilerplate changed values.
     "q_html_boilerplate": 13,
     "q_pipeline_clean_corpus": 13,
-    "q_pipeline_curated_mix": 13,
-    # (r12 entries earned green rows in the r12 window and
-    # self-cleared — pruned. For the record: the r12 staging change
-    # stages wire-format fixture batches per (app, sf_dir)
-    # (queries/dataflow.staged_wire) while run_batch KEEPS its decode
-    # checkpoint (materialize=True — 5c0690e reverted the
-    # materialize=False experiment).)
+    # r14 rewrites: bigram c2 de-skew (window → aggregate + join, with
+    # its consumers perplexity_buckets and curated_mix), embedding-dedup
+    # spread, contamination_fuzzy join elimination, tfidf and
+    # topic_balance persists, top_parts pre-reduce, q4's forced
+    # broadcast removed, keep_best argmax via max(struct); and the
+    # per-Arrow-batch decode memo in operators/multimodal.py under the
+    # seven multimodal decode/resize/hash paths.
+    "q_bigram_logprob": 14,
+    "q_perplexity_buckets": 14,
+    "q_pipeline_curated_mix": 14,
+    "q_dedup_keep_best": 14,
+    "q_dedup_embedding": 14,
+    "q_contamination_fuzzy": 14,
+    "q_tfidf_top_terms": 14,
+    "q_top_parts_by_revenue": 14,
+    "q4_priority_exists": 14,
+    "q_topic_balance": 14,
+    "q_multimodal_decode": 14,
+    "q_multimodal_resize": 14,
+    "q_multimodal_framesample": 14,
+    "q_multimodal_real_decode": 14,
+    "q_multimodal_real_resize": 14,
+    "q_multimodal_phash": 14,
+    "q_multimodal_phash_near": 14,
+    # r15: run_batch lost its lazy/materialize/live_topics options and
+    # its Column caches became spec-keyed lru_caches. Plans are
+    # unchanged (plans/r15 before/after), but every query routing
+    # through the batch router runs the new code. (The r12 staging
+    # change — queries/dataflow.staged_wire — stays: run_batch's decode
+    # checkpoint is unconditional; 5c0690e reverted the experiment that
+    # skipped it.)
+    "q_route_counts": 15,
+    "q_route_traced": 15,
+    "q_retry_drain": 15,
+    "q_retry_drain_shed": 15,
+    "q_entity_lookup": 15,
 }
 
 # Back-compat alias used by tests/tools that inspect the dirty set.
