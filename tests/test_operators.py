@@ -179,6 +179,42 @@ def test_resize_media_unhashable_blob_lands_in_error(spark):
     assert r[2]["resize_error"] is not None
 
 
+def test_media_memo_runs_codec_once_per_distinct_blob(spark):
+    """The media-map stage's per-Arrow-batch memo: in one batch, a
+    custom codec runs once per distinct (blob, mime) — for decode_media
+    and for resize_media's custom-decoder path — and a null blob lands
+    in the operator's *_error column."""
+    from typebus_spark.operators.multimodal import attach_blob, resize_media
+
+    docs = spark.createDataFrame(
+        list(enumerate(["aa"] * 3 + ["bbbb"] * 3 + [None])),
+        "doc_id long, text string",
+    ).coalesce(1)  # one partition, so one Arrow batch
+    media = attach_blob(docs, "text", "image/fake", "doc_id")
+
+    def counting_codec(calls):
+        def codec(blob, mime):
+            if blob is None:
+                raise ValueError("null blob")
+            calls.add(1)
+            return {"width": 8 * len(blob), "height": 8, "n_frames": 1,
+                    "features": [float(len(blob))]}
+
+        return codec
+
+    for op, err in (
+        (lambda c: decode_media(media, "doc_id", decoder=c), "decode_error"),
+        (lambda c: resize_media(media, "doc_id", decoder=c), "resize_error"),
+    ):
+        calls = spark.sparkContext.accumulator(0)
+        rows = {r["doc_id"]: r for r in op(counting_codec(calls)).collect()}
+        assert calls.value == 2, (err, calls.value)
+        assert all(rows[i][err] is None for i in range(6)), err
+        assert {rows[i]["width"] for i in range(6)} == {16, 32}, err
+        assert rows[6][err] == "ValueError: null blob", err
+        assert rows[6]["width"] is None, err
+
+
 def test_hash_split_deterministic_disjoint(spark, sf_dir):
     """hash_split: every row lands in exactly one split, assignment is
     stable across reruns/partitionings, and fractions are honored

@@ -411,10 +411,14 @@ def test_multimodal_real_decode_plan_discipline(spark, sf_dir):
     assert plan.count("MapInPandas (") == 1, plan
 
 
-def test_multimodal_real_resize_plan_discipline(spark, sf_dir):
-    """Fused decode+resize: exactly one mapInPandas stage (pixels never
-    cross an executor boundary twice), fixture join broadcast."""
-    plan = formatted_plan(_df(spark, sf_dir, "q_multimodal_real_resize"))
+@pytest.mark.parametrize(
+    "name", ["q_multimodal_real_resize", "q_multimodal_phash"]
+)
+def test_multimodal_real_resize_plan_discipline(spark, sf_dir, name):
+    """Fused decode+resize and the perceptual hash: exactly one
+    mapInPandas stage (pixels never cross an executor boundary twice),
+    fixture join broadcast."""
+    plan = formatted_plan(_df(spark, sf_dir, name))
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert plan.count("MapInPandas (") == 1, plan

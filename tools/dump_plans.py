@@ -6,9 +6,9 @@ Usage:
     python tools/dump_plans.py --compare plans/r15
 
 ``--compare DIR`` checks every ``*_before.txt``/``*_after.txt`` pair in
-DIR for equality once the per-run values are normalized (expression and
-RDD ids, uuid seeds, current-timestamp literals) and exits non-zero on
-any difference.
+DIR for equality once the per-run values are normalized (expression,
+RDD and exchange plan ids, uuid seeds, current-timestamp literals) and
+exits non-zero on any difference.
 
 Writes ``<out>/<query><suffix>.txt`` per query. Plans are captured with
 the same ``get_spark`` session shape the bench uses, so Exchange counts
@@ -27,11 +27,12 @@ import os
 import re
 import sys
 
-# per-run values in a formatted plan: expression ids, RDD ids, uuid()
-# seeds and the folded current_timestamp literal
+# per-run values in a formatted plan: expression ids, RDD ids, exchange
+# plan ids, uuid() seeds and the folded current_timestamp literal
 _RUN_VALUES = (
     (re.compile(r"#\d+L?"), "#N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"uuid\(Some\(-?\d+\)\)"), "uuid(Some(N))"),
     (re.compile(r"\d{4}-\d\d-\d\d \d\d:\d\d:\d\d(\.\d+)?"), "TS"),
 )

@@ -10,7 +10,11 @@ One invocation = one session of ONE version:
     python tools/interleave_bench.py --root <repo-or-worktree> \
         [--sf-dir /root/testdata/sf0.001] [--queries q_a,q_b,...]
 
-prints one JSON line {"root": ..., "queries": {name: best_sec}}.
+prints one JSON line {"root": ..., "total": ..., "queries": {name:
+best_sec}, "failed": [name, ...]} and exits non-zero when any query
+failed (in warm-up or a timed pass); a failed query is listed in
+``failed`` and left out of ``queries``, so compare ``failed`` before
+comparing totals.
 The caller (shell loop) alternates --root between the current repo and
 a ``git worktree`` of the comparison commit, then takes per-version
 minima across sessions. The tool itself lives only in the NEWER tree —
@@ -56,34 +60,40 @@ def main() -> None:
     spark = get_spark(app_name="interleave-bench")
     spark.sparkContext.setLogLevel("ERROR")
     names = [q for q in args.queries.split(",") if q]
-    # warmup (JIT/codegen) once per query
-    for n in names:
+    failed: set[str] = set()
+
+    def run_once(n: str) -> float | None:
+        t0 = time.perf_counter()
         try:
             QUERIES[n].fn(spark, args.sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
-        except Exception:
-            pass
-        spark.catalog.clearCache()
-        gc.collect()
+            return round(time.perf_counter() - t0, 4)
+        except Exception as e:  # noqa: BLE001
+            failed.add(n)
+            print(f"# {n}: {type(e).__name__}: {e}", file=sys.stderr)
+            return None
+        finally:
+            spark.catalog.clearCache()
+            gc.collect()
+
+    # warmup (JIT/codegen) once per query
+    for n in names:
+        run_once(n)
     best: dict[str, float] = {}
     for _ in range(args.passes):
         for n in names:
-            t0 = time.perf_counter()
-            try:
-                QUERIES[n].fn(spark, args.sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                t = round(time.perf_counter() - t0, 4)
-                best[n] = min(best.get(n, 1e9), t)
-            except Exception as e:  # noqa: BLE001
-                best.setdefault(n, -1.0)
-                print(f"# {n}: {type(e).__name__}", file=sys.stderr)
-            spark.catalog.clearCache()
-            gc.collect()
-    total = round(sum(v for v in best.values() if v > 0), 3)
-    print(json.dumps({"root": args.root, "total": total, "queries": best}))
+            t = run_once(n)
+            if t is not None:
+                best[n] = min(best.get(n, t), t)
+    # a failed query has no time and drops out of ``total``: list it and
+    # fail the run, so a broken tree never reads as a faster one
+    total = round(sum(best.values()), 3)
+    print(json.dumps({"root": args.root, "total": total, "queries": best,
+                      "failed": sorted(failed)}))
     spark.stop()
+    if failed:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

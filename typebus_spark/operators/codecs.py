@@ -309,22 +309,29 @@ def average_hash(blob: bytes, mime: str = "image/png", hash_size: int = 8) -> st
     return format(bits, f"0{hash_size * hash_size // 4}x")
 
 
+def fit_box(w: int, h: int, max_w: int, max_h: int) -> tuple[int, int]:
+    """Aspect-fit ``w`` × ``h`` into a ``max_w`` × ``max_h`` box:
+    unchanged when it already fits, else the limiting side takes the
+    box edge and the other scales by exact integer floor division
+    (min 1) — engine-portable, mirrored by the resize oracles' SQL."""
+    if w <= max_w and h <= max_h:
+        return w, h
+    if w * max_h >= h * max_w:  # width-limited
+        return max_w, max(1, h * max_w // w)
+    return max(1, w * max_h // h), max_h
+
+
 def real_resize(blob: bytes, mime: str, max_w: int, max_h: int) -> dict:
     """The ``decoder="real"`` fused decode+resize for ``resize_media``:
     real pixels, real nearest-neighbor downsample, sha over the RESIZED
     pixel bytes (so the hash witnesses actual resampling, not just the
-    target dims). Aspect-fit uses the same exact integer floor-division
-    contract as the stub path."""
+    target dims). Aspect-fit is ``fit_box``, shared with the stub
+    path."""
     if mime != "image/png":
         raise NotImplementedError(f"unsupported mime {mime!r} (real resize)")
     d = decode_png(blob)
     w, h, ch, px = d["width"], d["height"], d["channels"], d["pixels"]
-    if w <= max_w and h <= max_h:
-        ow, oh = w, h
-    elif w * max_h >= h * max_w:  # width-limited
-        ow, oh = max_w, max(1, h * max_w // w)
-    else:
-        ow, oh = max(1, w * max_h // h), max_h
+    ow, oh = fit_box(w, h, max_w, max_h)
     out = bytearray(ow * oh * ch)
     for oy in range(oh):
         sy = oy * h // oh

@@ -1,9 +1,10 @@
-"""Media codec provider registry — the DEPLOYMENT SEAM for the four
-per-row Python codec paths (decode, fused resize, perceptual hash).
+"""Media codec provider registry — the DEPLOYMENT SEAM for the three
+per-blob Python codec paths (decode, fused resize, perceptual hash).
 
 The engine's only irreducible per-row Python is the media codec work
-inside the Arrow-batched ``mapInPandas`` stages (r10 verdict: the four
-media queries are the documented deployment swap). This registry makes
+inside the one Arrow-batched media-map stage
+(``operators.multimodal._map_blobs``; r10 verdict: the media queries
+are the documented deployment swap). This registry makes
 that swap a code seam instead of prose: the default provider is the
 pure-stdlib PNG/WAV implementation (``operators.codecs``), and a
 deployment with real codec libraries (Pillow/libvips/ffmpeg bindings,

@@ -4,18 +4,26 @@ metadata (north-star extension, BASELINE.json).
 Data model: a media column is a struct
 ``{blob: binary, mime: string, meta: map<string,string>}`` — the
 BinaryType analog of the reference's opaque Avro payload
-(event/package.scala:166-169). All heavy per-item work (decode, resize,
-feature-extract, frame-sample) runs as Arrow-batched ``mapInPandas``
-stages so batches stream through executors without materializing a
-partition in memory; partitioning/caller contracts are real and tested.
+(event/package.scala:166-169).
+
+All per-blob codec work (decode, fused resize, perceptual hash) goes
+through ONE stage, ``_map_blobs``: it projects ``media.blob`` and
+``media.mime`` as flat columns into an Arrow-batched ``mapInPandas``,
+runs a per-blob ``fn(blob, mime) -> tuple`` once per distinct
+``(blob, mime)`` in the batch, and captures an exception per row in the
+operator's ``*_error`` column (the reference's ``Recoverable`` capture:
+a bad record never stops the stream). Each public operator is a choice
+of ``fn`` plus its output schema.
 
 Decoder selection: ``decoder=None`` → a deterministic fake
 (byte-statistics features) so plumbing tests are reproducible;
-``decoder="real"`` → the pure-stdlib PNG/WAV codecs in
-``operators.codecs`` (zlib inflate + unfilter, RIFF/wave) — real
-pixels/samples, no external libraries; unsupported MIME types degrade
-to per-row ``decode_error`` strings. Any callable ``(blob, mime) ->
-dict`` plugs a production codec (PIL/ffmpeg) into the same seam.
+``decoder="real"`` → the active codec provider
+(``operators.media_provider``, resolved at plan-build time on the
+driver and shipped in the stage's closure; by default the pure-stdlib
+PNG/WAV codecs in ``operators.codecs``) — real pixels/samples, no
+external libraries; unsupported MIME types degrade to per-row ``decode_error``
+strings. Any callable ``(blob, mime) -> dict`` plugs a production codec
+(PIL/ffmpeg) into the same seam.
 """
 
 from __future__ import annotations
@@ -26,6 +34,9 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from typebus_spark.operators.codecs import fit_box
+from typebus_spark.operators.media_provider import active_provider
 
 MEDIA_DDL = "blob binary, mime string, meta map<string,string>"
 
@@ -79,84 +90,91 @@ def _fake_decode(blob: bytes, mime: str) -> dict:
     }
 
 
+def _map_blobs(
+    df: DataFrame,
+    id_col: str,
+    media_col: str,
+    fn: Callable[[bytes, str], tuple],
+    out_fields: list[tuple[str, str]],
+    err_col: str,
+) -> DataFrame:
+    """The one media-map stage: ``fn(blob, mime) -> tuple`` (one value
+    per ``out_fields`` entry) over an Arrow-batched ``mapInPandas``.
+
+    Output: (id, *out_fields, err_col string). Only ``media.blob`` and
+    ``media.mime`` cross into Python, as flat columns (the ``meta`` map
+    never does). An exception from ``fn`` is captured per row as
+    ``"{Type}: {msg}"`` in ``err_col`` with every other output column
+    null (C2 never-stop supervision parity), never task-fatal.
+
+    Content memo, scoped to ONE Arrow batch: byte-identical
+    ``(blob, mime)`` inputs run ``fn`` once — exact re-uploads are the
+    common case in media streams and every ``fn`` here is
+    deterministic, so the memo cannot change a value. Batch scope
+    bounds memory to refs the batch already holds (no cross-batch,
+    cross-task or cross-run state).
+    """
+    names = [n for n, _ in out_fields]
+    out_ddl = ", ".join(
+        [f"{id_col} long", *(f"{n} {t}" for n, t in out_fields),
+         f"{err_col} string"]
+    )
+    nulls = (None,) * len(out_fields)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            memo: dict = {}
+            rows = []
+            for key in zip(pdf["blob"], pdf["mime"]):
+                hit = memo.get(key)
+                if hit is None:
+                    try:
+                        hit = (*fn(*key), None)
+                    except Exception as e:
+                        hit = (*nulls, f"{type(e).__name__}: {e}")
+                    memo[key] = hit
+                rows.append(hit)
+            out = pd.DataFrame(rows, columns=[*names, err_col])
+            out.insert(0, id_col, pdf[id_col].to_numpy())
+            yield out
+
+    return df.select(
+        id_col,
+        F.col(f"{media_col}.blob").alias("blob"),
+        F.col(f"{media_col}.mime").alias("mime"),
+    ).mapInPandas(run, schema=out_ddl)
+
+
 def decode_media(
     df: DataFrame,
     id_col: str,
     media_col: str = "media",
     decoder: Callable[[bytes, str], dict] | None = None,
-    batch_size_hint: int = 256,
 ) -> DataFrame:
-    """Decode/feature-extract stage over ``mapInPandas``.
+    """Decode/feature-extract stage (one ``_map_blobs`` pass).
 
     Output: (id, width, height, n_frames, features array<double>,
-    decode_error string). Per-item decoder exceptions are captured per
-    row (C2 never-stop supervision parity), not task-fatal.
+    decode_error string).
 
-    ``decoder="real"`` selects the pure-stdlib PNG/WAV codecs
-    (``operators.codecs.real_decode``); unsupported MIME types land in
-    ``decode_error``. The default is the deterministic fake.
-
-    Batch shape: only the codec call itself is per-row (irreducibly —
-    each blob is one opaque byte string); blob/mime extraction and the
-    output frame assembly are pandas column ops over the Arrow batch.
+    ``decoder="real"`` selects the active provider's decode (by default
+    the pure-stdlib PNG/WAV codecs, ``operators.codecs.real_decode``);
+    unsupported MIME types land in ``decode_error``. The default is the
+    deterministic fake.
     """
     if decoder == "real":  # type: ignore[comparison-overlap]
-        # deployment seam: resolve the ACTIVE codec provider at
-        # plan-build time (pure-stdlib by default; a deployment with
-        # real codec libs registers + activates its own provider —
-        # operators/media_provider.py)
-        from typebus_spark.operators.media_provider import active_provider
+        decoder = active_provider().decode
+    dec = decoder or _fake_decode
 
-        fn = active_provider().decode
-    else:
-        fn = decoder or _fake_decode
-    out_ddl = (
-        f"{id_col} long, width int, height int, n_frames int, "
-        "features array<double>, decode_error string"
+    def fn(blob: bytes, mime: str) -> tuple:
+        d = dec(blob, mime)
+        return d["width"], d["height"], d["n_frames"], d["features"]
+
+    return _map_blobs(
+        df, id_col, media_col, fn,
+        [("width", "int"), ("height", "int"), ("n_frames", "int"),
+         ("features", "array<double>")],
+        "decode_error",
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            media = pdf[media_col]
-            blobs = media.map(
-                lambda m: m["blob"] if isinstance(m, dict) else m.blob
-            )
-            mimes = media.map(
-                lambda m: m["mime"] if isinstance(m, dict) else m.mime
-            )
-            cols: dict[str, list] = {
-                k: [] for k in
-                ("width", "height", "n_frames", "features", "decode_error")
-            }
-            # content-addressed decode memo, scoped to THIS Arrow batch:
-            # byte-identical (blob, mime) inputs decode once — exact
-            # re-uploads/re-sends are the common case in media streams,
-            # and the decode is deterministic so the memo cannot change
-            # a value. Batch scope bounds memory to refs the batch
-            # already holds (no cross-batch, cross-task or cross-run
-            # state); distinct-blob workloads pay one dict probe per
-            # row, ~1e-4 of a PNG inflate.
-            memo: dict = {}
-            for blob, mime in zip(blobs, mimes):
-                key = (bytes(blob) if blob is not None else None, mime)
-                hit = memo.get(key)
-                if hit is None:
-                    try:
-                        d = fn(key[0], mime)
-                        hit = (d["width"], d["height"], d["n_frames"],
-                               d["features"], None)
-                    except Exception as e:
-                        hit = (None, None, None, None,
-                               f"{type(e).__name__}: {e}")
-                    memo[key] = hit
-                cols["width"].append(hit[0])
-                cols["height"].append(hit[1])
-                cols["n_frames"].append(hit[2])
-                cols["features"].append(hit[3])
-                cols["decode_error"].append(hit[4])
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), **cols})
-
-    return df.select(id_col, media_col).mapInPandas(run, schema=out_ddl)
 
 
 def resize_media(
@@ -167,188 +185,67 @@ def resize_media(
     max_h: int = 32,
     decoder: Callable[[bytes, str], dict] | None = None,
 ) -> DataFrame:
-    """Decode + aspect-fit resize FUSED in one Arrow-batched
-    ``mapInPandas`` pass — pixels never cross an executor boundary twice
-    (the shape that matters at 100 TB: decode-then-shuffle-then-resize
-    would move raw frames through an exchange).
+    """Decode + aspect-fit resize FUSED in one ``_map_blobs`` pass —
+    pixels never cross an executor boundary twice (the shape that
+    matters at 100 TB: decode-then-shuffle-then-resize would move raw
+    frames through an exchange).
 
     Target dims fit (w, h) into a ``max_w`` × ``max_h`` box preserving
-    aspect ratio with integer floor division (exact, engine-portable).
-    With the default stub decoder the emitted ``resized_sha`` is
+    aspect ratio with integer floor division (``codecs.fit_box`` —
+    exact, engine-portable). With the default stub decoder (or a custom
+    ``decoder`` callable) the emitted ``resized_sha`` is
     sha256(blob || '|WxH') — a deterministic stand-in with the real
-    data flow; with ``decoder="real"`` the PNG is actually decoded and
-    nearest-neighbor resampled and the sha covers the RESIZED pixel
-    bytes (``operators.codecs.real_resize``).
-
-    Batch shape: the codec call is per-row; the aspect-fit arithmetic
-    runs vectorized (numpy) over the whole Arrow batch and the output
-    frame assembles from column arrays, not per-record dicts.
+    data flow; with ``decoder="real"`` the active provider's resize
+    actually decodes and nearest-neighbor resamples the PNG and the sha
+    covers the RESIZED pixel bytes (``operators.codecs.real_resize``).
     """
-    out_ddl = (
-        f"{id_col} long, width int, height int, out_w int, out_h int, "
-        "resized_sha string, resize_error string"
+    if decoder == "real":  # type: ignore[comparison-overlap]
+        resize = active_provider().resize
+
+        def fn(blob: bytes, mime: str) -> tuple:
+            d = resize(blob, mime, max_w, max_h)
+            return (d["width"], d["height"], d["out_w"], d["out_h"],
+                    d["resized_sha"])
+    else:
+        dec = decoder or _fake_decode
+
+        def fn(blob: bytes, mime: str) -> tuple:
+            d = dec(blob, mime)
+            w, h = d["width"], d["height"]
+            ow, oh = fit_box(w, h, max_w, max_h)
+            sha = hashlib.sha256(blob + f"|{ow}x{oh}".encode()).hexdigest()
+            return w, h, ow, oh, sha
+
+    return _map_blobs(
+        df, id_col, media_col, fn,
+        [("width", "int"), ("height", "int"), ("out_w", "int"),
+         ("out_h", "int"), ("resized_sha", "string")],
+        "resize_error",
     )
-    real = decoder == "real"  # type: ignore[comparison-overlap]
-    fn = _fake_decode if (real or decoder is None) else decoder
-    if real:
-        # deployment seam (see decode_media): the active provider's
-        # fused resize, resolved driver-side and shipped in the closure
-        from typebus_spark.operators.media_provider import active_provider
-
-        real_resize = active_provider().resize
-    cols_out = ("width", "height", "out_w", "out_h", "resized_sha",
-                "resize_error")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            media = pdf[media_col]
-            blobs = media.map(
-                lambda m: m["blob"] if isinstance(m, dict) else m.blob
-            )
-            mimes = media.map(
-                lambda m: m["mime"] if isinstance(m, dict) else m.mime
-            )
-            n = len(pdf)
-            if real:
-                # fused decode + true nearest-neighbor resample per row;
-                # per-batch content memo (see decode_media) — max_w/max_h
-                # are fixed per operator call, so (blob, mime) keys alone
-                memo: dict = {}
-                cols: dict[str, list] = {k: [] for k in cols_out}
-                for blob, mime in zip(blobs, mimes):
-                    key = (bytes(blob) if blob is not None else None, mime)
-                    hit = memo.get(key)
-                    if hit is None:
-                        try:
-                            d = real_resize(key[0], mime, max_w, max_h)
-                            hit = tuple(d[k] for k in cols_out[:5]) + (None,)
-                        except Exception as e:
-                            hit = (None,) * 5 + (f"{type(e).__name__}: {e}",)
-                        memo[key] = hit
-                    for k, v in zip(cols_out, hit):
-                        cols[k].append(v)
-                yield pd.DataFrame(
-                    {id_col: pdf[id_col].to_numpy(), **cols}
-                )
-                continue
-            # stub/custom decoder path: per-row decode, then VECTORIZED
-            # aspect-fit over the batch
-            ws = np.zeros(n, dtype=np.int64)
-            hs = np.zeros(n, dtype=np.int64)
-            errs: list = [None] * n
-            for i, (blob, mime) in enumerate(zip(blobs, mimes)):
-                try:
-                    d = fn(bytes(blob) if blob is not None else None, mime)
-                    ws[i], hs[i] = d["width"], d["height"]
-                except Exception as e:
-                    ws[i], hs[i] = -1, -1
-                    errs[i] = f"{type(e).__name__}: {e}"
-            ok = ws >= 0
-            safe_w = np.where(ok, ws, 1)
-            safe_h = np.where(ok, hs, 1)
-            fits = (safe_w <= max_w) & (safe_h <= max_h)
-            wlim = safe_w * max_h >= safe_h * max_w
-            ow = np.where(
-                fits,
-                safe_w,
-                np.where(
-                    wlim, max_w, np.maximum(1, safe_w * max_h // safe_h)
-                ),
-            )
-            oh = np.where(
-                fits,
-                safe_h,
-                np.where(
-                    wlim, np.maximum(1, safe_h * max_w // safe_w), max_h
-                ),
-            )
-            # per-row guarded: a custom decoder may accept a None /
-            # non-bytes blob, and the module contract is row-level
-            # error capture, never task-fatal — an unhashable blob
-            # lands in resize_error like any decode failure
-            shas: list = [None] * n
-            for i, blob in enumerate(blobs):
-                if not ok[i]:
-                    continue
-                try:
-                    shas[i] = hashlib.sha256(
-                        bytes(blob) + f"|{ow[i]}x{oh[i]}".encode()
-                    ).hexdigest()
-                except Exception as e:
-                    ok[i] = False
-                    ws[i], hs[i] = -1, -1
-                    errs[i] = f"{type(e).__name__}: {e}"
-            bad = ~ok
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "width": pd.Series(ws, dtype="Int64").mask(bad),
-                    "height": pd.Series(hs, dtype="Int64").mask(bad),
-                    "out_w": pd.Series(ow, dtype="Int64").mask(bad),
-                    "out_h": pd.Series(oh, dtype="Int64").mask(bad),
-                    "resized_sha": shas,
-                    "resize_error": errs,
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(run, schema=out_ddl)
 
 
 def perceptual_hash_media(
     df: DataFrame, id_col: str, media_col: str = "media"
 ) -> DataFrame:
     """Perceptual image dedup key: 64-bit average-hash over REAL
-    decoded pixels (``operators.codecs.average_hash``) as a hex string
-    — the multimodal analog of the text content-hash: identical-looking
-    images (including exact nearest-neighbor rescales) collide, so
+    decoded pixels (the active provider's phash, by default
+    ``operators.codecs.average_hash``) as a hex string — the multimodal
+    analog of the text content-hash: identical-looking images
+    (including exact nearest-neighbor rescales) collide, so
     ``groupBy(phash)`` is the perceptual form of exact_dedup, and the
     hex splits into 16-bit substring bands for LSH bucketing when a
     hamming-tolerant near-dup pass is wanted (the simhash pattern).
 
-    One Arrow-batched mapInPandas stage, no shuffle — the groupBy the
-    caller adds is the only exchange, on a 16-char key."""
-    out_ddl = f"{id_col} long, phash string, phash_error string"
-    # deployment seam (see decode_media): the active provider's phash
-    from typebus_spark.operators.media_provider import active_provider
+    One ``_map_blobs`` stage, no shuffle — the groupBy the caller adds
+    is the only exchange, on a 16-char key."""
+    phash = active_provider().phash
 
-    average_hash = active_provider().phash
+    def fn(blob: bytes, mime: str) -> tuple:
+        return (phash(blob, mime),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            media = pdf[media_col]
-            blobs = media.map(
-                lambda m: m["blob"] if isinstance(m, dict) else m.blob
-            )
-            mimes = media.map(
-                lambda m: m["mime"] if isinstance(m, dict) else m.mime
-            )
-            hashes: list = []
-            errs: list = []
-            # per-batch content memo (see decode_media): identical blobs
-            # hash once — a perceptual EXACT-dup key by construction
-            memo: dict = {}
-            for blob, mime in zip(blobs, mimes):
-                key = (bytes(blob) if blob is not None else None, mime)
-                hit = memo.get(key)
-                if hit is None:
-                    try:
-                        hit = (average_hash(key[0], mime), None)
-                    except Exception as e:
-                        hit = (None, f"{type(e).__name__}: {e}")
-                    memo[key] = hit
-                hashes.append(hit[0])
-                errs.append(hit[1])
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "phash": hashes,
-                    "phash_error": errs,
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(run, schema=out_ddl)
+    return _map_blobs(
+        df, id_col, media_col, fn, [("phash", "string")], "phash_error"
+    )
 
 
 def phash_near_pairs(

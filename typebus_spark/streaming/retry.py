@@ -25,6 +25,7 @@ handlers: the ``row_handler`` wrapper catches exceptions into it) — the
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from functools import lru_cache
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -52,24 +53,6 @@ def split_failures(out: DataFrame) -> tuple[DataFrame, DataFrame]:
     return ok, bad
 
 
-def attempt_col() -> F.Column:
-    """Current attempt number from meta.extra (0 on first delivery)."""
-    return F.coalesce(
-        F.col("meta.extra").getItem(ATTEMPT_KEY).cast("int"), F.lit(0)
-    )
-
-
-def backoff_seconds_col(policy: RetryPolicy, attempt: F.Column) -> F.Column:
-    """Columnar form of RetryPolicy.backoff_seconds
-    (KafkaBus.scala:223-233): delay / attempt*delay / attempt²*delay."""
-    d = F.lit(policy.delay_seconds)
-    if policy.shape.value == "linear":
-        return attempt * d
-    if policy.shape.value == "exponential":
-        return (attempt * attempt) * d
-    return d
-
-
 def backoff_rounds(policy: RetryPolicy, attempt: int, clock_step: int) -> int:
     """How many ``clock_step``-sized drain rounds the backoff before
     retry number ``attempt`` spans — the scalar twin of the
@@ -84,8 +67,6 @@ def backoff_rounds(policy: RetryPolicy, attempt: int, clock_step: int) -> int:
     return max(1, math.ceil(d / max(1, clock_step)))
 
 
-from functools import lru_cache
-
 # Constant SQL fragments for the retry meta update, parsed JVM-side in
 # ONE py4j round-trip each instead of the ~50 a python-built
 # map_filter-lambda tree costs — this runs once per drain ROUND, and the
@@ -96,7 +77,10 @@ _NXT_SQL = f"(coalesce(cast(meta.extra['{ATTEMPT_KEY}'] as int), 0) + 1)"
 @lru_cache(maxsize=64)
 def _retry_parts(policy: RetryPolicy) -> tuple:
     """(eligible_cond, gaveup_cond, kept_extra_map, next_attempt_str,
-    backoff_seconds_long) — pure, policy-keyed expression trees."""
+    backoff_seconds_long) — pure, policy-keyed expression trees. The
+    backoff is the columnar RetryPolicy.backoff_seconds
+    (KafkaBus.scala:223-233) of the NEXT attempt: delay /
+    attempt*delay / attempt²*delay."""
     if policy.shape.value == "linear":
         backoff_sql = f"({_NXT_SQL} * {policy.delay_seconds!r})"
     elif policy.shape.value == "exponential":
@@ -167,7 +151,7 @@ def retry_decoded(
     in_fqn: str,
     policy: RetryPolicy,
     payload_cols: list[str],
-    now: F.Column | int | None = None,
+    now: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Failed decoded rows → (DECODED retry rows, gave-up rows).
 
@@ -180,40 +164,14 @@ def retry_decoded(
     Output shape is the decoded-stream shape ``(meta, payload, topic)`` —
     an in-process drain loop feeds it straight back into the router
     without the encode→publish→decode JSON round-trip the durable bus
-    path pays (see ``encode_retry`` for that form). ``now`` as an int (or
-    None for wall clock) hits the cached projection; a Column falls back
-    to a per-call build.
+    path pays (see ``encode_retry`` for that form). ``now`` is a pinned
+    epoch, or None for the wall clock.
     """
-    eligible_cond, gaveup_cond, kept_map, nxt_str, backoff = _retry_parts(
-        policy
+    eligible, gave_up = _retry_parts(policy)[:2]
+    cols = _retry_decoded_cols(
+        policy, tuple(payload_cols), retry_topic(in_fqn), now
     )
-    eligible = failed.filter(eligible_cond)
-    gave_up = failed.filter(gaveup_cond)
-
-    if now is None or isinstance(now, int):
-        cols = _retry_decoded_cols(
-            policy, tuple(payload_cols), retry_topic(in_fqn), now
-        )
-        return eligible.select(*cols), gave_up
-
-    new_meta = F.col("meta").withField(
-        "extra",
-        F.map_concat(
-            kept_map,
-            F.create_map(
-                F.lit(ATTEMPT_KEY),
-                nxt_str,
-                F.lit(NOT_BEFORE_KEY),
-                (now + backoff).cast("string"),
-            ),
-        ),
-    )
-    decoded = eligible.select(
-        new_meta.alias("meta"),
-        _payload_struct(tuple(payload_cols)),
-        F.lit(retry_topic(in_fqn)).alias("topic"),
-    )
-    return decoded, gave_up
+    return failed.filter(eligible).select(*cols), failed.filter(gave_up)
 
 
 def encode_retry(
@@ -221,7 +179,7 @@ def encode_retry(
     in_fqn: str,
     policy: RetryPolicy,
     payload_cols: list[str],
-    now: F.Column | int | None = None,
+    now: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Failed decoded rows → (retry-TOPIC bus rows, gave-up rows): the
     durable form of ``retry_decoded`` — same meta update, envelope
@@ -240,9 +198,6 @@ def _encode_retry_cols(retry_t: str) -> tuple:
     )
 
 
-from functools import lru_cache
-
-
 @lru_cache(maxsize=128)
 def _eligibility_conds(now_key: int | None) -> tuple:
     """(eligible, not-yet) filter conditions for a pinned epoch (or wall
@@ -258,24 +213,18 @@ def _eligibility_conds(now_key: int | None) -> tuple:
 
 
 def eligible_now(
-    decoded: DataFrame, now_epoch: F.Column | int | None = None
+    decoded: DataFrame, now_epoch: int | None = None
 ) -> DataFrame:
     """Rows whose backoff has elapsed (source-side filter on the unioned
     retry stream — the ``merge(retryQueueSource)`` analog,
     KafkaBus.scala:188-197)."""
-    if now_epoch is None or isinstance(now_epoch, int):
-        return decoded.filter(_eligibility_conds(now_epoch)[0])
-    nb = F.col("meta.extra").getItem(NOT_BEFORE_KEY).cast("long")
-    return decoded.filter(nb.isNull() | (nb <= now_epoch))
+    return decoded.filter(_eligibility_conds(now_epoch)[0])
 
 
 def not_yet_eligible(
-    decoded: DataFrame, now_epoch: F.Column | int | None = None
+    decoded: DataFrame, now_epoch: int | None = None
 ) -> DataFrame:
-    if now_epoch is None or isinstance(now_epoch, int):
-        return decoded.filter(_eligibility_conds(now_epoch)[1])
-    nb = F.col("meta.extra").getItem(NOT_BEFORE_KEY).cast("long")
-    return decoded.filter(nb.isNotNull() & (nb > now_epoch))
+    return decoded.filter(_eligibility_conds(now_epoch)[1])
 
 
 def row_handler(
@@ -296,7 +245,6 @@ def row_handler(
         out_ddl = (
             ", ".join(f"{n} {t}" for n, t in out_fields) + f", {ERROR_COL} string"
         )
-        meta_idx = [f.name for f in in_schema.fields]
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
@@ -320,7 +268,6 @@ def row_handler(
             for f in in_schema.fields
             if f.name == "meta"
         )
-        _ = meta_idx
         return df.mapInPandas(run, schema=f"{meta_ddl}, {out_ddl}")
 
     return transform

@@ -201,9 +201,7 @@ DIRTY_SINCE: dict[str, int] = {
     # its consumers perplexity_buckets and curated_mix), embedding-dedup
     # spread, contamination_fuzzy join elimination, tfidf and
     # topic_balance persists, top_parts pre-reduce, q4's forced
-    # broadcast removed, keep_best argmax via max(struct); and the
-    # per-Arrow-batch decode memo in operators/multimodal.py under the
-    # seven multimodal decode/resize/hash paths.
+    # broadcast removed, keep_best argmax via max(struct).
     "q_bigram_logprob": 14,
     "q_perplexity_buckets": 14,
     "q_pipeline_curated_mix": 14,
@@ -214,13 +212,15 @@ DIRTY_SINCE: dict[str, int] = {
     "q_top_parts_by_revenue": 14,
     "q4_priority_exists": 14,
     "q_topic_balance": 14,
-    "q_multimodal_decode": 14,
-    "q_multimodal_resize": 14,
-    "q_multimodal_framesample": 14,
-    "q_multimodal_real_decode": 14,
-    "q_multimodal_real_resize": 14,
-    "q_multimodal_phash": 14,
-    "q_multimodal_phash_near": 14,
+    # r15: all seven media paths now run the one media-map stage
+    # (operators/multimodal._map_blobs), with new Projects under it.
+    "q_multimodal_decode": 15,
+    "q_multimodal_resize": 15,
+    "q_multimodal_framesample": 15,
+    "q_multimodal_real_decode": 15,
+    "q_multimodal_real_resize": 15,
+    "q_multimodal_phash": 15,
+    "q_multimodal_phash_near": 15,
     # r15: run_batch lost its lazy/materialize/live_topics options and
     # its Column caches became spec-keyed lru_caches. Plans are
     # unchanged (plans/r15 before/after), but every query routing
